@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import ensure_confs
+from .session import session_memo
 
 #: all fixture tables (TESTDATA.md + FIXTURES.md; documents/embeddings are
 #: in scope even though TESTDATA.md's table list omits them).
@@ -36,19 +36,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: session → {(sf_dir, table) → lazy scan DataFrame}. A DataFrame is an
-#: immutable logical plan, so reusing one across queries is safe and skips
-#: the per-call footer read + analysis round-trip (~80 ms measured). The
-#: outer key is a WEAK reference to the SparkSession: identity-keyed (so a
-#: recycled id() can never alias a new session to a stopped session's
-#: plans) but evicted when the host drops the session, so a long-lived
-#: driver that cycles sessions doesn't pin every one for process life.
-import weakref  # noqa: E402
-
-_SCANS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table, normalizing engine-hostile physical types.
@@ -60,22 +47,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     an imprecise double and can be off by a microsecond vs DuckDB's exact
     truncation.
 
-    ``ensure_confs`` runs on EVERY call (cache hit or not) — the session
-    contract is that each registered query re-pins the runtime confs, so
-    a host that flips e.g. the session timezone between queries can't
-    silently diverge from the oracles.
+    The scan is memoized per session: a DataFrame is an immutable logical
+    plan, so reusing one across queries is safe and skips the per-call
+    footer read + analysis round-trip (~80 ms measured).
     """
-    ensure_confs(spark)
-    per_session = _SCANS.setdefault(spark, {})
-    key = (sf_dir, name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    per_session[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return df
+
+    return session_memo(spark, ("scan", sf_dir, name), build)
 
 
 def fan_out(df: DataFrame, *cols: str) -> DataFrame:

@@ -2077,7 +2077,7 @@ def agg_kll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from ..sources.scans import _SCRATCH
+    from ..session import SCRATCH
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
@@ -2113,7 +2113,7 @@ def agg_kll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         if frames:
             yield pd.concat(frames, ignore_index=True)
 
-    path = os.path.join(_SCRATCH, "kll_sketch_sink")
+    path = os.path.join(SCRATCH, "kll_sketch_sink")
     # the bench fixture is ONE parquet file → one input split; without
     # the fan-out the whole Python sketch build runs in a single task
     # (the stat_bootstrap_ci single-split lesson). At 100 TB the scan
@@ -2232,10 +2232,10 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..sources.scans import _SCRATCH
+    from ..session import SCRATCH
 
     o = load_table(spark, sf_dir, "orders")
-    path = os.path.join(_SCRATCH, "hll_sketch_sink")
+    path = os.path.join(SCRATCH, "hll_sketch_sink")
     (
         o.groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.hll_sketch_agg("o_custkey", F.lit(_HLLM_LGK)).alias("sk"))

@@ -24,7 +24,6 @@ result-invariant.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,26 +31,10 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.exact import dsum, dsum_sql
 from ..registry import register
+from ..session import SCRATCH
 
-_SCRATCH = os.path.join(tempfile.gettempdir(), "sky_spark_buckets")
 _N_BUCKETS = 8
 _SALT = 8
-
-
-def _cleanup_own_buckets() -> None:
-    """Remove this process's bucketed copies (suffix ``_<pid>``)."""
-    import shutil
-
-    suffix = f"_{os.getpid()}"
-    if os.path.isdir(_SCRATCH):
-        for d in os.listdir(_SCRATCH):
-            if d.endswith(suffix):
-                shutil.rmtree(os.path.join(_SCRATCH, d), ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_own_buckets)
 
 
 def _bucketed_table(
@@ -61,21 +44,20 @@ def _bucketed_table(
     process) and return it through the catalog, bucket metadata attached.
 
     Naming: a stable crc32 digest of sf_dir (never PYTHONHASHSEED-
-    randomized str hash, and no hashlib.md5 — FIPS hosts reject it) plus
-    the pid. The pid keeps concurrent processes off each other's paths
-    (each has a fresh in-memory metastore, so both would pass the
-    tableExists check and overwrite a shared path mid-read); the atexit
-    hook below removes this process's copies so isolation doesn't leak."""
+    randomized str hash, and no hashlib.md5 — FIPS hosts reject it). The
+    copies live under the per-process scratch root: each process has a
+    fresh in-memory metastore, so two processes would both pass the
+    tableExists check and overwrite a shared path mid-read."""
     import zlib
 
     digest = f"{zlib.crc32(sf_dir.encode()):08x}"
-    tbl = f"bkt_{name}_{digest}_{os.getpid()}"
+    tbl = f"bkt_{name}_{digest}"
     if not spark.catalog.tableExists(tbl):
         (
             load_table(spark, sf_dir, name)
             .write.bucketBy(_N_BUCKETS, key)
             .sortBy(key)
-            .option("path", os.path.join(_SCRATCH, tbl))
+            .option("path", os.path.join(SCRATCH, tbl))
             .mode("overwrite")
             .saveAsTable(tbl)
         )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..pipeline.dedup import _CC_ORACLE_CTES
 from ..registry import register
+from ..session import session_memo
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,34 +42,24 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session → {sf_dir → eagerly-materialized edge table}. Six graph
-#: operators start from the same lineitem self-join; without the cache
-#: each one re-pays the edge build (the dominant cost — measured ~1.5 s
-#: of graph_degree_hist's 2.6 s at sf0.1). At 100 TB this IS the
-#: materialized edge table every graph workload persists once and
-#: shares — the cache is that artifact's in-session form.
-_EDGES_CACHE: dict = {}
-
-
 def _edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # cache hits skip load_table, so re-apply the runtime confs here —
-    # the driver-contract guarantee (every registered query leaves the
-    # session configured) must hold on this path too.
-    from ..session import ensure_confs
-
-    ensure_confs(spark)
-    per_session = _EDGES_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        df = _edges(spark, sf_dir).localCheckpoint(eager=True)
-        per_session[sf_dir] = df
-    return df
+    """The eagerly-materialized edge table, memoized per session. Six graph
+    operators start from the same lineitem self-join; without the memo
+    each one re-pays the edge build (the dominant cost — measured ~1.5 s
+    of graph_degree_hist's 2.6 s at sf0.1). At 100 TB this IS the
+    materialized edge table every graph workload persists once and
+    shares — the memo is that artifact's in-session form."""
+    return session_memo(
+        spark,
+        ("edges", sf_dir),
+        lambda: _edges(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _strong_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STRONG co-purchase edge table (pairs co-purchased in ≥ 2
     orders) shared by the wedge-family link-prediction kernels —
-    eagerly localCheckpointed and session-cached like `_edges_cached`.
+    eagerly localCheckpointed and session-memoized like `_edges_cached`.
     Without the checkpoint every downstream consumer (adjacency both
     ways, degrees, the wedge self-join, the non-edge anti-join)
     re-derives the lineitem self-join: the jaccard plan held 36 parquet
@@ -76,18 +67,13 @@ def _strong_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan pin, tests/test_plan_shape_wedge.py). At 100 TB this IS the
     materialized strong-edge artifact a graph workload persists once.
     """
-    from ..session import ensure_confs
 
-    ensure_confs(spark)
-    per_session = _EDGES_CACHE.setdefault(spark, {})
-    key = (sf_dir, "strong")
-    df = per_session.get(key)
-    if df is None:
+    def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
         a0, b0 = li.alias("a"), li.alias("b")
-        df = (
+        return (
             a0.join(
                 b0,
                 (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -102,8 +88,8 @@ def _strong_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u", "v")
             .localCheckpoint(eager=True)
         )
-        per_session[key] = df
-    return df
+
+    return session_memo(spark, ("strong_edges", sf_dir), build)
 
 
 @register(
@@ -786,20 +772,22 @@ _KCORE_K, _KCORE_ROUNDS = 2, 6
 
 
 def _kcore_oracle() -> str:
-    """Bounded k-core peel as unrolled CTE rounds (pagerank precedent)."""
+    """Bounded k-core peel as unrolled CTE rounds (pagerank precedent),
+    one MATERIALIZED CTE per round: inlined, every round re-expands all
+    earlier rounds and the oracle runs out of memory."""
     ctes = [
-        """e AS (
+        """e AS MATERIALIZED (
   SELECT a.l_partkey AS u, b.l_partkey AS v
   FROM lineitem a
   JOIN lineitem b ON a.l_orderkey = b.l_orderkey
                  AND a.l_partkey < b.l_partkey
   GROUP BY 1, 2 HAVING COUNT(*) >= 2
 ),
-n0 AS (SELECT u AS node FROM e UNION SELECT v FROM e)"""
+n0 AS MATERIALIZED (SELECT u AS node FROM e UNION SELECT v FROM e)"""
     ]
     for i in range(1, _KCORE_ROUNDS + 1):
         ctes.append(
-            """n{i} AS (
+            """n{i} AS MATERIALIZED (
   SELECT node FROM n{p}
   WHERE (SELECT COUNT(*) FROM e
          JOIN n{p} x ON x.node = e.u

@@ -2089,7 +2089,7 @@ def agg_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..sources.scans import _SCRATCH
+    from ..session import SCRATCH
 
     li = load_table(spark, sf_dir, "lineitem")
     exploded = li.select(
@@ -2101,7 +2101,7 @@ def agg_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_mode = exploded.groupBy(
         "l_returnflag", F.col("j").cast("long").alias("j"), "cell"
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    path = os.path.join(_SCRATCH, "cms_sketch_sink")
+    path = os.path.join(SCRATCH, "cms_sketch_sink")
     per_mode.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
 
     merged = (

@@ -28,14 +28,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..session import session_memo
 
 _TOP_K = 20
-
-#: session → {sf_dir → broadcast of the normalized reference matrix}.
-#: One collect + one broadcast per (session, sf_dir) — without the cache,
-#: every kernel invocation (bench runs 3×, determinism tests 2×) leaks a
-#:  full embedding-matrix broadcast for process lifetime.
-_REF_BC: dict = {}
 
 #: Exact-kernel ceiling (SCALE.md "Similarity"): the broadcast reference
 #: matrix must fit comfortably in every executor. 2M × 64-dim float64
@@ -56,32 +51,35 @@ def _reference_broadcast(
     max_rows: int = _REF_MAX_ROWS,
     max_bytes: int = _REF_MAX_BYTES,
 ):
-    per_session = _REF_BC.setdefault(spark, {})
-    bc = per_session.get(sf_dir)
-    if bc is not None:
-        return bc
-    n = e.count()
-    if n > max_rows:
-        raise BroadcastCeilingError(
-            f"exact-kNN reference side has {n} rows > ceiling {max_rows}; "
-            "the broadcast kernel is the exact rung only — switch to "
-            "ann_ivf (centroid-partitioned) or sim_knn_lsh (bucketed) "
-            "for collections past the ceiling"
-        )
-    rows = e.collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    if mat.nbytes > max_bytes:
-        raise BroadcastCeilingError(
-            f"exact-kNN reference matrix is {mat.nbytes} bytes > ceiling "
-            f"{max_bytes}; switch to ann_ivf or sim_knn_lsh"
-        )
-    order = np.argsort(ids)
-    ids, mat = ids[order], mat[order]
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, mat))
-    per_session[sf_dir] = bc
-    return bc
+    """Broadcast of the normalized reference matrix, memoized per session:
+    one collect + one broadcast per (session, sf_dir) — without the memo,
+    every kernel invocation (bench runs 3×, determinism tests 2×) leaks a
+    full embedding-matrix broadcast for process lifetime."""
+
+    def build():
+        n = e.count()
+        if n > max_rows:
+            raise BroadcastCeilingError(
+                f"exact-kNN reference side has {n} rows > ceiling {max_rows}; "
+                "the broadcast kernel is the exact rung only — switch to "
+                "ann_ivf (centroid-partitioned) or sim_knn_lsh (bucketed) "
+                "for collections past the ceiling"
+            )
+        rows = e.collect()
+        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+        mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        if mat.nbytes > max_bytes:
+            raise BroadcastCeilingError(
+                f"exact-kNN reference matrix is {mat.nbytes} bytes > ceiling "
+                f"{max_bytes}; switch to ann_ivf or sim_knn_lsh"
+            )
+        order = np.argsort(ids)
+        ids, mat = ids[order], mat[order]
+        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        return spark.sparkContext.broadcast((ids, mat))
+
+    return session_memo(spark, ("ref_bc", sf_dir), build)
+
 
 def _normalize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:

@@ -1,6 +1,6 @@
-"""SparkSession factory + session-conf enforcement.
+"""SparkSession factory, session-conf enforcement and engine-state lifetime.
 
-Two jobs:
+Four jobs:
 
 1. ``get_spark()`` — build a local session with the engine's config block
    (used by tests and bench.py).
@@ -8,6 +8,12 @@ Two jobs:
    config to an externally-created session (the driver builds its own
    SparkSession; every registered query routes through this so oracle
    agreement does not depend on who built the session).
+3. ``session_memo(spark, key, build)`` — the one place session-scoped
+   artifacts (lazy scans, checkpointed edge/band tables, broadcasts) are
+   kept; they live exactly as long as the session.
+4. ``SCRATCH`` / ``scratch_dir(name)`` — the one process-scoped scratch
+   root (sink round-trips, bucketed copies, stream checkpoints), removed
+   at exit.
 
 Config rationale (SURVEY.md §4):
 - ``spark.sql.shuffle.partitions`` sized to the core count: at local[32]
@@ -27,9 +33,29 @@ Config rationale (SURVEY.md §4):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+#: one scratch root per PROCESS, under $TMPDIR, removed at exit. mkdtemp
+#: isolates concurrent check/bench processes — a shared fixed path lets one
+#: process overwrite a directory another is mid-read on — and the exit hook
+#: keeps that isolation from leaking a directory per run.
+SCRATCH = tempfile.mkdtemp(prefix="sky_spark_")
+atexit.register(shutil.rmtree, SCRATCH, ignore_errors=True)
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh directory under the process scratch root."""
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=SCRATCH)
+
 
 #: confs that are runtime-settable on any session (all SQL confs).
 _RUNTIME_CONFS: dict[str, str] = {
@@ -97,6 +123,27 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
             # over configuration sugar.
             pass
     return spark
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Return the artifact memoized under ``key`` on this session, building
+    it with ``build()`` on first use.
+
+    The memo lives in the session object's own ``__dict__``, so it is freed
+    together with the session — a cached DataFrame references its session,
+    so any memo keyed by the session from outside would keep it alive, along
+    with every checkpointed block. A ``build()`` that raises stores nothing.
+
+    ``ensure_confs`` runs on every call, cache hit or not: the session
+    contract is that each registered query re-pins the runtime confs, so a
+    host that flips e.g. the session timezone between queries can't silently
+    diverge from the oracles.
+    """
+    ensure_confs(spark)
+    memo = spark.__dict__.setdefault("_sky_memo", {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def get_spark(app_name: str = "analyse-the-sky-spark") -> SparkSession:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .scans import _SCRATCH
+from ..session import SCRATCH
 
 _BLOCK = 2880
 _CARD = 80
@@ -216,7 +216,7 @@ def parse_fits_bintables(buf: bytes) -> Iterator[tuple[dict, pd.DataFrame]]:
 def _stage_nation_fits(spark: SparkSession, sf_dir: str) -> str:
     """Author one FITS file per region from the ``nation`` table
     (25 rows total — the scan_binaryfile bounded-staging pattern)."""
-    base = os.path.join(_SCRATCH, "nation_fits")
+    base = os.path.join(SCRATCH, "nation_fits")
     os.makedirs(base, exist_ok=True)
     rows = sorted(
         load_table(spark, sf_dir, "nation")
@@ -399,7 +399,7 @@ def _stage_sky_tiles(
     writes — see `_atomic_write`). ``cards_fn(f) -> dict`` appends
     per-tile integer header cards (the WCS staging); ``pixel_fn(f,
     idx)`` supplies the centi-grid pixel values."""
-    base = os.path.join(_SCRATCH, dirname)
+    base = os.path.join(SCRATCH, dirname)
     os.makedirs(base, exist_ok=True)
     for f in range(_IMG_TILES):
         path = os.path.join(base, f"tile_{f}.fits")

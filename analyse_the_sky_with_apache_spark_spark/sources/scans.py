@@ -18,7 +18,6 @@ on the read-back values, so the whole write→read cycle is hash-verified.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,24 +25,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.exact import dsum, dsum_sql
 from ..registry import register
-
-#: per-PROCESS scratch root for sink round-trips; files are tiny (region /
-#: one lineitem projection). mkdtemp isolates concurrent check/bench
-#: processes — a shared fixed path lets one process overwrite a directory
-#: another is mid-read on — and the atexit hook removes it so isolation
-#: doesn't leak a directory per run.
-_SCRATCH = tempfile.mkdtemp(prefix="sky_spark_sinks_")
-
-
-def _cleanup_scratch() -> None:
-    import shutil
-
-    shutil.rmtree(_SCRATCH, ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_scratch)
+from ..session import SCRATCH
 
 
 @register(
@@ -70,7 +52,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ``region`` first (tiny, driver-side write) and then exercises the
     real CSV reader path: explicit DDL schema, header row, no inference.
     """
-    path = os.path.join(_SCRATCH, "region_csv")
+    path = os.path.join(SCRATCH, "region_csv")
     load_table(spark, sf_dir, "region").select("r_regionkey", "r_name").coalesce(
         1
     ).write.mode("overwrite").option("header", "true").csv(path)
@@ -89,7 +71,7 @@ SELECT n_nationkey, n_name, n_regionkey FROM nation
 )
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines scan with declared schema (no inference pass)."""
-    path = os.path.join(_SCRATCH, "nation_json")
+    path = os.path.join(SCRATCH, "nation_json")
     load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     ).coalesce(1).write.mode("overwrite").json(path)
@@ -115,7 +97,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     is returned — the oracle hash therefore verifies the sink preserved
     every value bit-for-bit, not just the row count.
     """
-    path = os.path.join(_SCRATCH, "revenue_parquet")
+    path = os.path.join(SCRATCH, "revenue_parquet")
     agg = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
@@ -149,7 +131,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the layout/pruning pattern that matters at 100 TB: a predicate on the
     partition key skips data proportionally.
     """
-    path = os.path.join(_SCRATCH, "lineitem_by_flag")
+    path = os.path.join(SCRATCH, "lineitem_by_flag")
     load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     ).write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
@@ -177,7 +159,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     question — every operator in this engine is storage-format agnostic
     past the scan node.
     """
-    path = os.path.join(_SCRATCH, "region_orc")
+    path = os.path.join(SCRATCH, "region_orc")
     df = load_table(spark, sf_dir, "region")
     df.write.mode("overwrite").orc(path)
     return spark.read.orc(path).select("r_regionkey", "r_name")
@@ -197,7 +179,7 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back — line order differs from input order, which the
     order-insensitive oracle hash is explicitly robust to.
     """
-    path = os.path.join(_SCRATCH, "docs_text")
+    path = os.path.join(SCRATCH, "docs_text")
     load_table(spark, sf_dir, "documents").select("text").write.mode(
         "overwrite"
     ).text(path)
@@ -271,7 +253,7 @@ def scan_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return path) is hash-verified.
     """
     # Registration is idempotent (re-register replaces) and cheap;
-    # id(spark)-keyed memoization can misfire after a session is
+    # memoizing on the session's id() can misfire after a session is
     # garbage-collected and its id reused (ADVICE r6) — so just register.
     spark.dataSource.register(_make_skygen_source())
     return (
@@ -300,7 +282,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     row groups — the open-format equivalent of clustered indexes.
     Content round-trips bit-exactly (hash-checked against the source).
     """
-    path = os.path.join(_SCRATCH, "li_clustered")
+    path = os.path.join(SCRATCH, "li_clustered")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity"
     )
@@ -338,7 +320,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_name", "n_regionkey"
     )
     rows = src.collect()  # 25 rows — driver-side file authoring only
-    path = os.path.join(_SCRATCH, "nation_dirty_csv")
+    path = os.path.join(SCRATCH, "nation_dirty_csv")
     os.makedirs(path, exist_ok=True)
     fname = os.path.join(path, "part-00000.csv")
     with open(fname, "w") as f:
@@ -398,7 +380,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-shape test instead of assumed. The oracle aggregates the
     original table — identical rows by construction.
     """
-    part_dir = os.path.join(_SCRATCH, "events_by_type")
+    part_dir = os.path.join(SCRATCH, "events_by_type")
     done = os.path.join(part_dir, "_STAGED")
     if not os.path.exists(done):
         load_table(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
@@ -450,7 +432,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     1% of the data; the plan-shape test asserts the pruning expression
     is present.
     """
-    part_dir = os.path.join(_SCRATCH, "events_by_type")
+    part_dir = os.path.join(SCRATCH, "events_by_type")
     done = os.path.join(part_dir, "_STAGED")
     if not os.path.exists(done):
         load_table(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
@@ -503,7 +485,7 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB you amortize it by writing the unified schema forward
     and keeping mergeSchema for the historical tail.
     """
-    base = os.path.join(_SCRATCH, "region_evolved")
+    base = os.path.join(SCRATCH, "region_evolved")
     done = os.path.join(base, "_STAGED")
     r = load_table(spark, sf_dir, "region")
     if not os.path.exists(done):
@@ -551,7 +533,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the listing, and ``spark.sql.files.maxPartitionBytes`` packs small
     media files into shared tasks.
     """
-    base = os.path.join(_SCRATCH, "blob_stage")
+    base = os.path.join(SCRATCH, "blob_stage")
     rows = sorted(
         load_table(spark, sf_dir, "region")
         .select("r_regionkey", "r_name")
@@ -587,7 +569,7 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema is always declared — XML inference is an extra full pass
     plus type guessing.
     """
-    path = os.path.join(_SCRATCH, "nation_xml")
+    path = os.path.join(SCRATCH, "nation_xml")
     load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     ).coalesce(1).write.mode("overwrite").format("xml").option(
@@ -635,7 +617,7 @@ def scan_log_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses the same synthesized lines, never touching a float
     rendering).
     """
-    path = os.path.join(_SCRATCH, "events_log")
+    path = os.path.join(SCRATCH, "events_log")
     ev = load_table(spark, sf_dir, "events")
     line = F.concat(
         F.lit("ev="), F.col("event_id").cast("string"),
@@ -747,7 +729,7 @@ def scan_nested_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned `ReadSchema` so the optimization itself cannot silently
     regress.
     """
-    path = os.path.join(_SCRATCH, "orders_nested")
+    path = os.path.join(SCRATCH, "orders_nested")
     o = load_table(spark, sf_dir, "orders")
     nested = o.select(
         "o_orderkey",
@@ -806,7 +788,7 @@ def _txn_log_build(spark: SparkSession, sf_dir: str) -> str:
     import json
 
     root = os.path.join(
-        _SCRATCH, "txnlog_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "txnlog_" + os.path.basename(os.path.normpath(sf_dir))
     )
     data, logd = os.path.join(root, "data"), os.path.join(root, "_log")
     os.makedirs(logd, exist_ok=True)
@@ -1266,7 +1248,7 @@ def _txn_schema_build(spark: SparkSession, sf_dir: str) -> str:
     import json
 
     root = os.path.join(
-        _SCRATCH, "txnschema_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "txnschema_" + os.path.basename(os.path.normpath(sf_dir))
     )
     data, logd = os.path.join(root, "data"), os.path.join(root, "_log")
     os.makedirs(logd, exist_ok=True)
@@ -1576,11 +1558,11 @@ def sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is the O(tasks) commit-message pass, same as any file sink.
     """
     # Register unconditionally (ADVICE r6): re-registration is
-    # idempotent, whereas id(spark)-keyed memoization silently skips
+    # idempotent, whereas memoizing on the session's id() silently skips
     # registration when a dead session's id is reused.
     spark.dataSource.register(_make_jsonl_sink_source())
     path = os.path.join(
-        _SCRATCH, "pyds_sink_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "pyds_sink_" + os.path.basename(os.path.normpath(sf_dir))
     )
     os.makedirs(path, exist_ok=True)
     for old in os.listdir(path):
@@ -1632,7 +1614,7 @@ def sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash).
     """
     path = os.path.join(
-        _SCRATCH, "bloom_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "bloom_" + os.path.basename(os.path.normpath(sf_dir))
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1685,7 +1667,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     misnumbered row batch all break the hash.
     """
     path = os.path.join(
-        _SCRATCH, "fmeta_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "fmeta_" + os.path.basename(os.path.normpath(sf_dir))
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.pmod("o_orderkey", F.lit(4)).alias("bucket")
@@ -1738,8 +1720,8 @@ def scan_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash.
     """
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, "dv_base_" + sf_tag)
-    dv = os.path.join(_SCRATCH, "dv_del_" + sf_tag)
+    base = os.path.join(SCRATCH, "dv_base_" + sf_tag)
+    dv = os.path.join(SCRATCH, "dv_del_" + sf_tag)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.pmod("o_orderkey", F.lit(4)).alias("bucket")
     )
@@ -1809,7 +1791,7 @@ def txn_log_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, or a broken union breaks the hash.
     """
     root = os.path.join(
-        _SCRATCH, "ptev_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "ptev_" + os.path.basename(os.path.normpath(sf_dir))
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -1891,7 +1873,7 @@ def _txn_wap_build(spark: SparkSession, sf_dir: str) -> str:
     import json
 
     root = os.path.join(
-        _SCRATCH, "txnwap_" + os.path.basename(os.path.normpath(sf_dir))
+        SCRATCH, "txnwap_" + os.path.basename(os.path.normpath(sf_dir))
     )
     data = os.path.join(root, "data")
     logd = os.path.join(root, "_log")
@@ -2105,7 +2087,7 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel files within); the read-back prunes on the partition
     column. gzip per-file keeps the text format's size honest.
     """
-    out = os.path.join(_SCRATCH, f"json_rt_{os.path.basename(sf_dir)}")
+    out = os.path.join(SCRATCH, f"json_rt_{os.path.basename(sf_dir)}")
     src = (
         load_table(spark, sf_dir, "orders")
         .where(F.pmod("o_orderkey", F.lit(7)) == 0)

@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, dsum_sql
 from ..registry import register
-from .replay import checkpoint_dir, run_stream, stage_events
+from ..session import scratch_dir
+from .replay import run_stream, stage_events
 
 
 @register(
@@ -258,7 +259,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("fb"))
+        .option("checkpointLocation", scratch_dir("fb"))
         .trigger(availableNow=True)
         .start()
     )
@@ -575,8 +576,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") != "error"
     )
-    # under the process checkpoint root → removed by replay's atexit hook
-    root = checkpoint_dir("resume")
+    root = scratch_dir("resume")
     src = os.path.join(root, "src")
     sink = os.path.join(root, "sink")
     ckpt = os.path.join(root, "ckpt")
@@ -662,9 +662,6 @@ def _make_tickgen_source():
     return TickSource
 
 
-_TICKGEN_REGISTERED: set[int] = set()
-
-
 @register(
     "stream_pyds_source",
     oracle="""
@@ -691,9 +688,8 @@ def stream_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     — registration, offset bookkeeping, the Python worker row path and
     the stateful agg all sit inside the driver's own gate.
     """
-    if id(spark) not in _TICKGEN_REGISTERED:
-        spark.dataSource.register(_make_tickgen_source())
-        _TICKGEN_REGISTERED.add(id(spark))
+    # Register unconditionally, as the batch sources do (ADVICE r6).
+    spark.dataSource.register(_make_tickgen_source())
     stream = spark.readStream.format("tickgen").load()
     agg = stream.groupBy(
         F.expr("tick div 100").alias("bucket")
@@ -730,13 +726,10 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/Iceberg with the same per-batch latest-per-key collapse, and
     the target stays |keys|-sized, not |events|-sized).
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
     src = stage_events(spark, sf_dir, n_files=4)
-    root = tempfile.mkdtemp(prefix="upsert_")
+    root = scratch_dir("upsert")
     state: dict[str, str] = {}
 
     def latest_per_key(df: DataFrame) -> DataFrame:
@@ -762,19 +755,16 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("upsert"))
+        .option("checkpointLocation", scratch_dir("upsert"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    final = spark.read.parquet(state["path"]).select(
+    return spark.read.parquet(state["path"]).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("value").alias("last_value"),
     )
-    out = final.localCheckpoint(eager=True)  # outlive the tempdir
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 # NOTE — transformWithStateInPandas (Spark 4's StatefulProcessor API, the
@@ -1047,7 +1037,7 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("rate_limit"))
+        .option("checkpointLocation", scratch_dir("rate_limit"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1157,7 +1147,7 @@ def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(_make_jsonl_stream_sink_source())
     out = os.path.join(
-        checkpoint_dir("pyds_sink_out"), "data"
+        scratch_dir("pyds_sink_out"), "data"
     )
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
@@ -1167,7 +1157,7 @@ def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         src.writeStream.format("jsonlstreamsink")
         .option("path", out)
-        .option("checkpointLocation", checkpoint_dir("pyds_sink_ckpt"))
+        .option("checkpointLocation", scratch_dir("pyds_sink_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1255,7 +1245,7 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         agg.writeStream.outputMode("update")
         .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("upd_mode"))
+        .option("checkpointLocation", scratch_dir("upd_mode"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1341,10 +1331,10 @@ def stream_cms_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import load_table
     from ..operators.warehouse import _CM_D, _cm_cell
-    from ..sources.scans import _SCRATCH
+    from ..session import SCRATCH
 
     src = stage_events(spark, sf_dir, n_files=4)
-    path = os.path.join(_SCRATCH, f"stream_cms_sink_{_uuid.uuid4().hex[:8]}")
+    path = os.path.join(SCRATCH, f"stream_cms_sink_{_uuid.uuid4().hex[:8]}")
 
     def sink(df: DataFrame, batch_id: int) -> None:
         partial = (
@@ -1363,7 +1353,7 @@ def stream_cms_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("cms_sink"))
+        .option("checkpointLocation", scratch_dir("cms_sink"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1460,12 +1450,12 @@ def stream_dedup_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..catalog import load_table
-    from ..sources.scans import _SCRATCH
+    from ..session import SCRATCH
 
     src = stage_events(spark, sf_dir, n_files=4)
     run_id = _uuid.uuid4().hex[:8]
-    index_path = os.path.join(_SCRATCH, f"dedup_index_{run_id}")
-    stats_path = os.path.join(_SCRATCH, f"dedup_index_stats_{run_id}")
+    index_path = os.path.join(SCRATCH, f"dedup_index_{run_id}")
+    stats_path = os.path.join(SCRATCH, f"dedup_index_stats_{run_id}")
 
     def sink(df: DataFrame, batch_id: int) -> None:
         ss = df.sparkSession
@@ -1494,7 +1484,7 @@ def stream_dedup_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("dedup_idx"))
+        .option("checkpointLocation", scratch_dir("dedup_idx"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1641,12 +1631,12 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.scans import _SCRATCH
+    from ..session import SCRATCH
 
     src = stage_events(spark, sf_dir, n_files=4)
     run_id = _uuid.uuid4().hex[:8]
-    root = os.path.join(_SCRATCH, f"cdc_state_{run_id}")
-    stats_path = os.path.join(_SCRATCH, f"cdc_stats_{run_id}")
+    root = os.path.join(SCRATCH, f"cdc_state_{run_id}")
+    stats_path = os.path.join(SCRATCH, f"cdc_stats_{run_id}")
     cur = {"path": None}
 
     def sink(df: DataFrame, batch_id: int) -> None:
@@ -1719,7 +1709,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir("cdc_apply"))
+        .option("checkpointLocation", scratch_dir("cdc_apply"))
         .trigger(availableNow=True)
         .start()
     )

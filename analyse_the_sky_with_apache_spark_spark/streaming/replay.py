@@ -4,7 +4,7 @@ No fixture is a live stream, so streaming queries run over ``events``
 replayed through a real Structured Streaming file source:
 
     stage_events()  — materialize events (optionally split into N
-                      time-ordered files) under /tmp and return a
+                      time-ordered files) under _STAGE_ROOT and return a
                       ``readStream`` DataFrame over that directory;
     run_stream()    — execute a streaming transformation to a memory sink
                       with trigger(availableNow=True) and return the final
@@ -15,6 +15,12 @@ results even in update mode); N files + maxFilesPerTrigger=1 → N batches
 in event-time order (watermarks advance between batches, which is what
 the late-data and multi-batch tests need).
 
+Two roots, two lifetimes. Staged event copies live under ``_STAGE_ROOT``,
+a fixed path shared ACROSS processes (deterministic content, keyed by the
+source's mtime, so later runs reuse it). Every query checkpoint gets a
+fresh ``session.scratch_dir`` under the process scratch root, which is
+removed when the process exits.
+
 This harness is test scaffolding — the 100-TB deployment points the same
 streaming queries at a Kafka/file-stream source; only ``stage_events``
 is replaced.
@@ -24,33 +30,15 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import scratch_dir
 
 _STAGE_ROOT = "/tmp/analyse_the_sky_stream_stage"
-
-#: one checkpoint root per process, removed at exit — per-query mkdtemp
-#: with no cleanup leaks dozens of sky_ckpt_* dirs per check/bench run.
-_CKPT_ROOT = tempfile.mkdtemp(prefix="sky_ckpt_root_")
-
-
-def checkpoint_dir(name: str) -> str:
-    """A fresh checkpoint location under the process's cleaned-up root."""
-    return tempfile.mkdtemp(prefix=f"{name}_", dir=_CKPT_ROOT)
-
-
-def _cleanup_ckpt() -> None:
-    shutil.rmtree(_CKPT_ROOT, ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_ckpt)
 
 
 def stage_events(
@@ -135,7 +123,7 @@ def run_stream(
         transformed.writeStream.format("memory")
         .queryName(qname)
         .outputMode(mode)
-        .option("checkpointLocation", checkpoint_dir(qname))
+        .option("checkpointLocation", scratch_dir(qname))
         .trigger(availableNow=True)
         .start()
     )

@@ -422,8 +422,8 @@ def test_broadcast_ceiling_guard_trips(spark):
 
     from analyse_the_sky_with_apache_spark_spark.pipeline import similarity as S
 
+    spark = spark.newSession()  # a fresh session starts with an empty memo
     e = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    S._REF_BC.pop(spark, None)  # defeat the per-session cache
     with pytest.raises(S.BroadcastCeilingError, match="ann_ivf"):
         S._reference_broadcast(spark, SF_DIR + "#rowcap", e, max_rows=10)
     with pytest.raises(S.BroadcastCeilingError, match="sim_knn_lsh"):
@@ -431,6 +431,53 @@ def test_broadcast_ceiling_guard_trips(spark):
     # the real bounds still admit the fixture-scale matrix
     bc = S._reference_broadcast(spark, SF_DIR, e)
     assert bc.value[1].shape[0] > 0
+
+
+def test_session_memo_reuses_then_frees_with_session(spark):
+    """Session-scoped artifacts are shared within a session and die with
+    it: the scan, edge and band memos hand back the SAME objects on a
+    second call, and once the session is dropped the session object is
+    collected and its checkpointed blocks leave block storage."""
+    import gc
+    import time
+    import weakref
+
+    from analyse_the_sky_with_apache_spark_spark.operators.graph import (
+        _edges_cached,
+    )
+    from analyse_the_sky_with_apache_spark_spark.pipeline.dedup import (
+        minhash_bands_cached,
+    )
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored_rdds():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    before = stored_rdds()
+    s = spark.newSession()
+    for build in (
+        lambda x: load_table(x, SF_DIR, "lineitem"),
+        lambda x: _edges_cached(x, SF_DIR),
+        lambda x: minhash_bands_cached(x, SF_DIR),
+    ):
+        first, second = build(s), build(s)
+        assert first is second
+    del first, second
+    held = stored_rdds() - before
+    assert held, "the edge and band memos hold checkpointed blocks"
+
+    ref = weakref.ref(s)
+    del s
+    spark.newSession()  # PySpark's RDD.toDF patch pins the newest session
+    gc.collect()
+    assert ref() is None, "a dropped session must not be kept alive"
+    for _ in range(20):
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+        if not held & stored_rdds():
+            break
+    assert not held & stored_rdds(), "checkpointed blocks outlived the session"
 
 
 def test_incremental_minhash_finds_cross_split_exact_dups(spark):

@@ -134,16 +134,14 @@ def test_cms_sink_merge_receives_multiple_batch_partials(spark):
         _CM_D,
         _CM_W,
     )
-    from analyse_the_sky_with_apache_spark_spark.sources.scans import (
-        _SCRATCH,
-    )
+    from analyse_the_sky_with_apache_spark_spark.session import SCRATCH
 
     rows = QUERIES["stream_cms_sink_merge"](spark, SF_DIR).collect()
     assert len(rows) > 0
     assert all(r["overcount"] >= 0 for r in rows)
     assert all(r["cms_estimate"] >= r["exact_cnt"] for r in rows)
     dirs = sorted(
-        glob.glob(os.path.join(_SCRATCH, "stream_cms_sink_*")),
+        glob.glob(os.path.join(SCRATCH, "stream_cms_sink_*")),
         key=os.path.getmtime,
     )
     sink = spark.read.parquet(dirs[-1])

@@ -15,9 +15,7 @@ from pyspark.sql import functions as F
 
 from analyse_the_sky_with_apache_spark_spark.catalog import load_table
 from analyse_the_sky_with_apache_spark_spark.registry import queries
-from analyse_the_sky_with_apache_spark_spark.streaming.replay import (
-    checkpoint_dir,
-)
+from analyse_the_sky_with_apache_spark_spark.session import scratch_dir
 from tests.conftest import SF_DIR
 
 _LATE_STAGE = "/tmp/analyse_the_sky_stream_stage/late_row_test"
@@ -99,7 +97,7 @@ def test_crafted_late_row_is_dropped(spark):
     q = (
         agg.writeStream.foreachBatch(sink)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir("late_row_fb"))
+        .option("checkpointLocation", scratch_dir("late_row_fb"))
         .trigger(availableNow=True)
         .start()
     )
